@@ -22,6 +22,8 @@ REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 import bench  # noqa: E402  (reuses amplified_dir + headline_queries)
+from setsm_postprocessing_python_spark.plans.planview import (  # noqa: E402
+    formatted_plan)
 
 
 def main() -> None:
@@ -47,8 +49,7 @@ def main() -> None:
             continue
         df = fn(spark, bench_dir)
         if tag != "probe":
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted")
+            plan = formatted_plan(df)
             (out_dir / f"{name}_{tag}.txt").write_text(plan)
             print(f"wrote {name}_{tag}.txt ({plan.count('Exchange')} Exchange)")
         if timing or tag == "probe":

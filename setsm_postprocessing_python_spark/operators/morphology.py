@@ -1,4 +1,4 @@
-"""Morphology over the occupied-cell set — imerode/imdilate/bwboundaries.
+"""Morphology over the occupied-cell set — imerode/imdilate/range filter.
 
 Reference semantics (citations into /root/reference):
 - imdilate/imerode, binary, radius-r square kernels
@@ -10,7 +10,8 @@ Reference semantics (citations into /root/reference):
 
 Cell-space recast: a binary raster = the set of occupied cells; dilation is
 the distinct union of k-rings, erosion keeps cells whose full k-ring is
-occupied, boundary = occupied minus eroded. Value-space range filter =
+occupied, boundary = occupied minus eroded (computed inline by
+q_morphology as is_occupied & ~is_eroded). Value-space range filter =
 ring max - ring min. All pure DataFrame algebra (explode + aggregate),
 two-stage and skew-tolerant. Large radii = iterate (the reference applies
 radius-31/61 kernels the same way: repeated small kernels).
@@ -52,13 +53,6 @@ def imerode(cells: DataFrame, ring: int = 1) -> DataFrame:
     occ = cells.select("cell", "cell_x", "cell_y")
     return (occ.join(votes, "cell").where(F.col("v") == k)
             .select("cell", "cell_x", "cell_y"))
-
-
-def bwboundaries(cells: DataFrame, ring: int = 1) -> DataFrame:
-    """Boundary cells: occupied minus eroded (array != erode(array))."""
-    eroded = imerode(cells, ring).select("cell")
-    return cells.join(eroded, "cell", "left_anti").select(
-        "cell", "cell_x", "cell_y")
 
 
 def ring_range_filter(df: DataFrame, value: str, ring: int = 1) -> DataFrame:

@@ -11,8 +11,9 @@
   buckets), exact cosine re-rank. Sub-quadratic: cost ~ n * bucket_size.
   The numpy matmul runs in an Arrow-batched pandas UDF (vectorized,
   no per-row Python).
-- embedding_near_dup: pairs above a cosine threshold (near-duplicate
-  detection for training data) via the same machinery.
+- ann_dedup_topk: exact-dup collapse, then lsh_topk over the distinct
+  vectors (the production composition on duplicate-heavy corpora).
+- ivf_topk: k-means coarse quantizer + cogrouped exact re-rank.
 """
 
 from __future__ import annotations
@@ -51,44 +52,6 @@ def brute_force_topk(df: DataFrame, k: int = 3,
              .where(F.col("sim_rank") <= k)
              .select(F.col("vec_id").cast("bigint"), F.col("nbr_id").cast("bigint"),
                      "cosine", "sim_rank"))
-
-
-def embedding_near_dup(df: DataFrame, threshold: float = 0.9,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       method: str = "brute", dim: int | None = None,
-                       n_hint: int | None = None, seed: int = 42) -> DataFrame:
-    """Near-duplicate pairs (a < b) with cosine >= threshold.
-
-    method='brute': exact O(n^2) broadcast crossJoin — the bounded-n
-    oracle baseline (JVM zip_with expression, bit-matches the DuckDB
-    formulation). method='lsh': the scale path — candidate pairs from the
-    multi-table multiprobe LSH machinery (lsh_candidate_cosines, per-
-    bucket cogrouped re-rank), orientation-normalized to a < b and
-    thresholded. Approximate (recall-gated in tests on clustered
-    vectors); cosine values for pairs found are exact and identical to
-    the brute path up to float64 expression order (the LSH path computes
-    einsum on float64, the brute path the sequential-fold JVM expression
-    — round before hashing across the two). Requires dim for the
-    hyperplanes; pass n_hint (table stats) to skip the sizing count."""
-    if method == "lsh":
-        assert dim is not None, "method='lsh' needs the embedding dim"
-        cands = lsh_candidate_cosines(df, dim, id_col=id_col,
-                                      vec_col=vec_col, seed=seed,
-                                      n_hint=n_hint)
-        sym = cands.select(
-            F.least("vec_id", "nbr_id").alias("id_a"),
-            F.greatest("vec_id", "nbr_id").alias("id_b"),
-            "cosine").distinct()
-        return (sym.where(F.col("cosine") >= threshold)
-                   .select(F.col("id_a").cast("bigint"),
-                           F.col("id_b").cast("bigint"), "cosine"))
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    j = a.crossJoin(F.broadcast(b)).where(F.col("id_a") < F.col("id_b"))
-    j = j.withColumn("cosine", F.expr(_cos_expr("va", "vb")))
-    return (j.where(F.col("cosine") >= threshold)
-             .select(F.col("id_a").cast("bigint"), F.col("id_b").cast("bigint"),
-                     "cosine"))
 
 
 def ann_dedup_topk(df: DataFrame, dim: int, k: int = 3,
@@ -152,9 +115,9 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
 def _cogroup_pair_cos(pdf: pd.DataFrame) -> pd.DataFrame:
     """Shared cogrouped re-rank kernel (LSH buckets and IVF lists): all
     rows of one candidate group, columns (vec_id, v, is_b). Emits the
-    a-probe x b-home pair cosines (chunked gather + float64 einsum — the
-    same expression the pair-join path computes, bit-identical). A jumbo
-    group costs more chunks, never more than ~1M pair rows of memory."""
+    a-probe x b-home pair cosines (chunked gather + float64 einsum). A
+    jumbo group costs more chunks, never more than ~1M pair rows of
+    memory."""
     ids = pdf["vec_id"].to_numpy()
     mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
     ib = np.flatnonzero(pdf["is_b"].to_numpy())
@@ -410,7 +373,6 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
              planes_per_table: int | None = None, id_col: str = "vec_id",
              vec_col: str = "embedding", seed: int = 42,
              n_hint: int | None = None, probe_bits: int = 2,
-             rerank: str = "bucket",
              dup_guard: float | None = DUP_GUARD_DEFAULT) -> DataFrame:
     """Approximate top-k: candidates collide in >=1 of n_tables LSH
     tables; exact cosine re-rank within candidates. Collision probability
@@ -434,28 +396,19 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
     serves as n_hint, so the guarded path costs no extra job when n_hint
     was not supplied.
 
-    rerank='bucket' (default): cosine is computed PER BUCKET, where the
-    candidate vectors are already co-located by the bucket shuffle — one
-    applyInPandas over bucket groups gathers the (a-probe x b-home) pair
-    matrix and runs the batched einsum in-group, emitting the NARROW
-    (vec_id, nbr_id, cosine) stream. Each vector moves once per probe
-    entry (~(1+probe_bits)*T rows of 256 B), never once per candidate
-    pair — on the 16k-vector bench stage that is ~100 MB shuffled vs
-    ~4 GB for the per-pair re-attach path (measured: re-attach joins
-    34.6 s + pair-UDF 23 s -> bucket re-rank runs the same FLOPs on
-    co-located data). Cross-table duplicate pairs are removed inside the
-    ranking window (cosine is bit-deterministic per pair — same float64
-    gather + einsum — so duplicates sort adjacently and a lag(nbr_id)
-    check drops them without a dedicated distinct exchange). No
-    broadcast, no driver collect: the shape holds
-    at any n. Hot-bucket skew is bounded by the planes_per_table sizing
-    below; in-UDF pair enumeration is chunked so a jumbo bucket degrades
-    to more chunks, not more memory.
-
-    rerank='pairjoin': the previous shape (distinct id pairs, re-attach
-    vectors by join, per-pair pandas UDF) — kept as the fallback for
-    pathological bucket skew where one bucket's pair matrix would
-    dominate a task.
+    Re-rank: cosine is computed PER BUCKET, where the candidate vectors
+    are already co-located by the bucket shuffle — one applyInPandas over
+    bucket groups gathers the (a-probe x b-home) pair matrix and runs the
+    batched float64 einsum in-group, emitting the NARROW (vec_id, nbr_id,
+    cosine) stream. Each vector moves once per probe entry
+    (~(1+probe_bits)*T rows of 256 B), never once per candidate pair — on
+    the 16k-vector bench stage that is ~100 MB shuffled vs ~4 GB for a
+    per-pair re-attach join (measured: re-attach joins 34.6 s + pair-UDF
+    23 s -> bucket re-rank runs the same FLOPs on co-located data). No
+    broadcast, no driver collect: the shape holds at any n. Hot-bucket
+    skew is bounded by the planes_per_table sizing below; in-UDF pair
+    enumeration is chunked so a jumbo bucket degrades to more chunks, not
+    more memory.
 
     planes_per_table defaults to log2(n / 64) clamped to >=4: average
     bucket size ~64 regardless of n, so candidate count stays ~64*T per
@@ -480,48 +433,6 @@ def lsh_topk(df: DataFrame, dim: int, k: int = 3, n_tables: int = 8,
                 "dup_guard=None to run the raw path deliberately.")
         if n_hint is None:
             n_hint = stats["n"]
-    j = lsh_candidate_cosines(df, dim, n_tables, planes_per_table, id_col,
-                              vec_col, seed, n_hint, probe_bits, rerank,
-                              group_topk=k)
-    # cross-group duplicate pairs are removed INSIDE the ranking window
-    # (round 7): cosine is a deterministic function of the id pair, so
-    # duplicates of a pair sort adjacently under (cosine DESC, nbr_id)
-    # and a lag(nbr_id) comparison drops them — one Exchange + Sort
-    # carries dedup AND rank, where the former standalone .distinct()
-    # paid its own full exchange of the candidate stream before the
-    # window's (guide §2.4: two operations keyed compatibly share one
-    # exchange).
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
-    j = (j.withColumn("_dup", F.coalesce(
-            F.lag("nbr_id").over(w) == F.col("nbr_id"), F.lit(False)))
-         .where(~F.col("_dup")).drop("_dup"))
-    return (j.withColumn("sim_rank", F.row_number().over(w))
-             .where(F.col("sim_rank") <= k)
-             .select(F.col("vec_id").cast("bigint"), F.col("nbr_id").cast("bigint"),
-                     "cosine", "sim_rank"))
-
-
-def lsh_candidate_cosines(df: DataFrame, dim: int, n_tables: int = 8,
-                          planes_per_table: int | None = None,
-                          id_col: str = "vec_id", vec_col: str = "embedding",
-                          seed: int = 42, n_hint: int | None = None,
-                          probe_bits: int = 2,
-                          rerank: str = "bucket",
-                          group_topk: int | None = None) -> DataFrame:
-    """The LSH candidate stream shared by lsh_topk (-> window top-k) and
-    embedding_near_dup(method='lsh') (-> symmetric threshold filter):
-    (vec_id, nbr_id, cosine) for every a-probe x b-home bucket collision,
-    cosine exact (float64 gather + einsum). A pair colliding in several
-    groups may appear multiple times WITH IDENTICAL cosine — consumers
-    dedup inside a shuffle they already pay (see lsh_topk /
-    embedding_near_dup). Directed: vec_id's probe buckets against
-    nbr_id's home buckets.
-
-    group_topk (top-k callers only — NEVER the threshold path, which
-    needs EVERY above-threshold pair): keep each vec's k best candidates
-    per super group inside the re-rank UDF, shrinking the post-re-rank
-    shuffle from the full candidate stream to <= k rows per (vec, group);
-    result-identical for the final per-vec top-k (see _super_group_topk)."""
     n = n_hint
     if planes_per_table is None:
         import math
@@ -540,84 +451,65 @@ def lsh_candidate_cosines(df: DataFrame, dim: int, n_tables: int = 8,
     base = with_lsh_buckets(df, dim, n_tables, planes_per_table, vec_col,
                             seed, probe_bits=min(probe_bits, planes_per_table),
                             out="probe_buckets")
-    if rerank == "bucket":
-        # ONE posexplode of the probe list: position < n_tables marks the
-        # home-bucket (index-side) entries — home buckets are the first
-        # n_tables entries of the multiprobe output, so the index side is
-        # a flag, not a second explode. Within a table the home bucket and
-        # its single-bit flips are pairwise distinct and tables carry
-        # distinct key prefixes, so each vector lands in a bkt group at
-        # most once — in-group pairs are unique by construction.
-        # posexplode_outer, not posexplode: the plain generator adds an
-        # implicit size>0 filter whose condition re-evaluates the
-        # hyperplane pandas UDF (measured: 2 ArrowEvalPython nodes, the
-        # matmul paid twice per row). The probe array is never empty by
-        # construction, so the outer variant is row-identical and runs
-        # the UDF once.
-        entries = base.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
-            F.posexplode_outer("probe_buckets").alias("pos", "bkt")).select(
-            "vec_id", "v", "bkt", (F.col("pos") < n_tables).alias("is_b"))
-        # SUPER-GROUPS: grouping directly on bkt makes one pandas call
-        # per bucket — with ~21-entry buckets that is n*T/21 groups, and
-        # pandas per-group overhead (~0.1-0.3 ms) dominates at scale
-        # (millions of groups for 10^8+ vectors). Instead hash buckets
-        # into n_super coalesced groups sized for ~2^16 entries each
-        # (~17 MB of vectors per group task) and run the per-bucket pair
-        # kernel via an in-UDF groupby — same pairs, same cosines, ~32x
-        # fewer pandas invocations here. Derived from n (known: sizing
-        # already needed it), so no extra job.
-        # floor 256 (round 7, was 64): with few groups a handful of hot
-        # buckets hash together into one jumbo kernel task and the stage
-        # rides on that straggler (measured on the bench corpus: floor 64
-        # gave 2.1-10.7 s swings, floor 256 a stable ~1.7 s — §2.6 of the
-        # optimization guide). At scale the n_entries>>16 term dominates
-        # and the floor is inert; the per-vec top-k is grouping-invariant
-        # (see _super_group_topk), so results are identical.
-        if n is not None:
-            n_entries = n * (1 + min(probe_bits, planes_per_table)) * n_tables
-            n_super = int(max(256, min(1 << 20, n_entries >> 16)))
-        else:  # explicit planes, no n_hint: skip the sizing job entirely
-            n_super = 4096
-        kernel = (_super_group_topk(group_topk) if group_topk
-                  else _super_group_pair_cos)
-        # NB: the stream may carry CROSS-group duplicates of a pair
-        # (identical cosine — the kernel is deterministic); consumers
-        # dedup where they already shuffle (lsh_topk inside its ranking
-        # window, embedding_near_dup in its orientation distinct) instead
-        # of paying a dedicated distinct exchange here (round 7)
-        j = (entries.withColumn(
-                "sg", F.pmod(F.xxhash64("bkt"), F.lit(n_super)))
-             .groupBy("sg")
-             .applyInPandas(kernel,
-                            "vec_id bigint, nbr_id bigint, cosine double"))
-    else:
-        base = base.withColumn("buckets", F.slice("probe_buckets", 1, n_tables))
-        base = base.persist()
-        a = base.select(F.col(id_col).alias("vec_id"),
-                        F.explode("probe_buckets").alias("bkt"))
-        b = base.select(F.col(id_col).alias("nbr_id"),
-                        F.explode("buckets").alias("bkt"))
-        # dedupe candidates on the id PAIR (cheap fixed-width shuffle), then
-        # re-attach vectors — never shuffle/hash the 64-dim arrays per pair
-        pairs = (a.join(b, "bkt").where(F.col("vec_id") != F.col("nbr_id"))
-                  .select("vec_id", "nbr_id").distinct())
-        va_side = base.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("va"))
-        vb_side = base.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("vb"))
-        j = pairs.join(va_side, "vec_id").join(vb_side, "nbr_id")
-        # candidate re-rank cosine: Arrow-batched numpy (the exact-parity
-        # zip_with expression path in brute_force_topk is ~300k pairs/s; the
-        # batched BLAS path is the one that survives millions of candidates)
-        from pyspark.sql.types import DoubleType
-
-        @F.pandas_udf(DoubleType())
-        def cos_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
-            ma = np.stack(va.to_numpy()).astype(np.float64)
-            mb = np.stack(vb.to_numpy()).astype(np.float64)
-            dots = np.einsum("ij,ij->i", ma, mb)
-            na = np.sqrt(np.einsum("ij,ij->i", ma, ma))
-            nb = np.sqrt(np.einsum("ij,ij->i", mb, mb))
-            return pd.Series(dots / (na * nb))
-
-        j = j.withColumn("cosine", cos_udf(F.col("va"), F.col("vb")))
-    return j.select("vec_id", "nbr_id", "cosine")
+    # ONE posexplode of the probe list: position < n_tables marks the
+    # home-bucket (index-side) entries — home buckets are the first
+    # n_tables entries of the multiprobe output, so the index side is
+    # a flag, not a second explode. Within a table the home bucket and
+    # its single-bit flips are pairwise distinct and tables carry
+    # distinct key prefixes, so each vector lands in a bkt group at
+    # most once — in-group pairs are unique by construction.
+    # posexplode_outer, not posexplode: the plain generator adds an
+    # implicit size>0 filter whose condition re-evaluates the
+    # hyperplane pandas UDF (measured: 2 ArrowEvalPython nodes, the
+    # matmul paid twice per row). The probe array is never empty by
+    # construction, so the outer variant is row-identical and runs
+    # the UDF once.
+    entries = base.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
+        F.posexplode_outer("probe_buckets").alias("pos", "bkt")).select(
+        "vec_id", "v", "bkt", (F.col("pos") < n_tables).alias("is_b"))
+    # SUPER-GROUPS: grouping directly on bkt makes one pandas call
+    # per bucket — with ~21-entry buckets that is n*T/21 groups, and
+    # pandas per-group overhead (~0.1-0.3 ms) dominates at scale
+    # (millions of groups for 10^8+ vectors). Instead hash buckets
+    # into n_super coalesced groups sized for ~2^16 entries each
+    # (~17 MB of vectors per group task) and run the per-bucket pair
+    # kernel via an in-UDF groupby — same pairs, same cosines, ~32x
+    # fewer pandas invocations here. Derived from n (known: sizing
+    # already needed it), so no extra job.
+    # floor 256 (round 7, was 64): with few groups a handful of hot
+    # buckets hash together into one jumbo kernel task and the stage
+    # rides on that straggler (measured on the bench corpus: floor 64
+    # gave 2.1-10.7 s swings, floor 256 a stable ~1.7 s — §2.6 of the
+    # optimization guide). At scale the n_entries>>16 term dominates
+    # and the floor is inert; the per-vec top-k is grouping-invariant
+    # (see _super_group_topk), so results are identical.
+    if n is not None:
+        n_entries = n * (1 + min(probe_bits, planes_per_table)) * n_tables
+        n_super = int(max(256, min(1 << 20, n_entries >> 16)))
+    else:  # explicit planes, no n_hint: skip the sizing job entirely
+        n_super = 4096
+    # the in-UDF partial top-k keeps each vec's k best candidates per
+    # super group, so the post-re-rank shuffle carries <= k rows per
+    # (vec, group) instead of the full candidate stream
+    j = (entries.withColumn(
+            "sg", F.pmod(F.xxhash64("bkt"), F.lit(n_super)))
+         .groupBy("sg")
+         .applyInPandas(_super_group_topk(k),
+                        "vec_id bigint, nbr_id bigint, cosine double"))
+    # cross-group duplicate pairs are removed INSIDE the ranking window
+    # (round 7): cosine is a deterministic function of the id pair, so
+    # duplicates of a pair sort adjacently under (cosine DESC, nbr_id)
+    # and a lag(nbr_id) comparison drops them — one Exchange + Sort
+    # carries dedup AND rank, where the former standalone .distinct()
+    # paid its own full exchange of the candidate stream before the
+    # window's (guide §2.4: two operations keyed compatibly share one
+    # exchange).
+    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
+    j = (j.withColumn("_dup", F.coalesce(
+            F.lag("nbr_id").over(w) == F.col("nbr_id"), F.lit(False)))
+         .where(~F.col("_dup")).drop("_dup"))
+    return (j.withColumn("sim_rank", F.row_number().over(w))
+             .where(F.col("sim_rank") <= k)
+             .select(F.col("vec_id").cast("bigint"), F.col("nbr_id").cast("bigint"),
+                     "cosine", "sim_rank"))

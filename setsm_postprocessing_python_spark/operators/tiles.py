@@ -71,15 +71,6 @@ def fixed_depth_tiles(depth: int = D.TILE_DEPTH) -> list[Tile]:
     return level
 
 
-def tiles_df(spark, tiles: list[Tile]) -> DataFrame:
-    return spark.createDataFrame(
-        [(t.tile_id, t.depth, t.xmin, t.xmax, t.ymin, t.ymax, t.parent_tile_id)
-         for t in tiles],
-        "tile_id string, depth int, xmin double, xmax double, "
-        "ymin double, ymax double, parent_tile_id string",
-    )
-
-
 # ---------------------------------------------------------------------------
 # PIP assignment — broadcast prepared geometries in a pandas UDF
 # ---------------------------------------------------------------------------
@@ -215,14 +206,6 @@ def assign_polygons_pip(df: DataFrame, polys: dict[str, np.ndarray],
 # ---------------------------------------------------------------------------
 # adaptive quad-tree (split while count > max_pages)
 # ---------------------------------------------------------------------------
-
-def tile_from_key(tile_id: str) -> Tile:
-    """Rebuild a Tile's rectangle by walking the quadkey digits from ROOT."""
-    t = ROOT
-    for d in tile_id[1:]:
-        t = _children(t)[int(d)]
-    return t
-
 
 def adaptive_leaf_map(df: DataFrame, max_pages: int, max_depth: int = 12,
                       lat: str = "lat", lon: str = "lon") -> DataFrame:

@@ -4,16 +4,19 @@ published bench numbers can never drift apart."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import re
 
 from pyspark.sql import DataFrame
 
 
 def formatted_plan(df: DataFrame) -> str:
-    spark = df.sparkSession
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"))
+    """The text of the public `df.explain(mode="formatted")`, captured."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()[:-1]  # drop print()'s trailing newline
 
 
 def n_exchanges(plan_or_df) -> int:

@@ -1,74 +1,32 @@
-"""Scale-layout: pushdown + pruning evidence, write/read roundtrip."""
+"""Pages layout: cell-range predicates reach the parquet scan of the
+day-partitioned bucketed table, and the pushed range returns the same
+rows as the flat derivation."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
+import pyspark.sql.functions as F
 
-import pytest
-
-from setsm_postprocessing_python_spark.sources.layout import (
-    cell_range_scan,
-    read_pages_layout,
-    write_pages_layout,
-)
-from setsm_postprocessing_python_spark.sources.pages import geocoded_pages
+SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def layout_dir(spark):
-    d = tempfile.mkdtemp(prefix="layout_") + "/pages"
-    df = geocoded_pages(spark, "/root/testdata/sf0.001")
-    write_pages_layout(df, d)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+def test_predicate_pushdown_reaches_scan(spark, tmp_path):
+    from setsm_postprocessing_python_spark.plans.planview import (
+        formatted_plan)
+    from setsm_postprocessing_python_spark.sources import bucketed as B
 
-
-def test_roundtrip_preserves_rows(spark, layout_dir):
-    src = geocoded_pages(spark, "/root/testdata/sf0.001")
-    back = read_pages_layout(spark, layout_dir)
-    assert back.count() == src.count()
-    a = {r.url for r in src.select("url").collect()}
-    b = {r.url for r in back.select("url").collect()}
-    assert a == b
-
-
-def test_predicate_pushdown_reaches_scan(spark, layout_dir):
-    df = cell_range_scan(spark, layout_dir, 0, 10**9)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert "PushedFilters" in plan
-    assert "GreaterThanOrEqual(cell" in plan and "LessThanOrEqual(cell" in plan
-
-
-def test_range_scan_correct(spark, layout_dir):
-    src = geocoded_pages(spark, "/root/testdata/sf0.001")
-    cells = sorted(r.cell for r in src.select("cell").collect())
-    lo, hi = cells[100], cells[300]
-    got = cell_range_scan(spark, layout_dir, lo, hi).count()
-    want = len([c for c in cells if lo <= c <= hi])
-    assert got == want
-
-
-def test_walk_depth_bounds(spark, layout_dir, tmp_path):
-    """walk(mindepth, maxdepth) mirrors the reference's bounded scandir
-    (lib/walk.py:12-42): only depths within the band are yielded, descent
-    stops at maxdepth, and the bucket-partitioned layout is discoverable."""
-    import os
-
-    from setsm_postprocessing_python_spark.sources.layout import walk
-
-    root = str(tmp_path / "tree")
-    for sub in ("a/b/c", "a/b2", "d"):
-        os.makedirs(f"{root}/{sub}")
-    open(f"{root}/a/f0", "w").close()
-    open(f"{root}/a/b/f1", "w").close()
-
-    depths = {os.path.relpath(p, root): (d, f) for p, d, f in walk(root, 1, 2)}
-    assert set(depths) == {"a", "d", "a/b", "a/b2"}  # depth 0 and 3 excluded
-    assert depths["a"][1] == ["f0"]
-    assert all(os.path.relpath(p, root) != "a/b/c" for p, _, _ in walk(root, 0, 1))
-
-    # discovers the url_bucket=* partition dirs of the scale layout
-    buckets = [d for _, ds, _ in walk(layout_dir, 0, 0) for d in ds]
-    assert any(b.startswith("url_bucket=") for b in buckets)
+    table = "t_layout_cell_range"
+    try:
+        tbl, _ = B.ensure_bucketed_pages_by_day(
+            spark, SF, str(tmp_path / "pages"), table=table, n_buckets=4)
+        cells = sorted(r.cell for r in tbl.select("cell").collect())
+        lo, hi = cells[len(cells) // 4], cells[3 * len(cells) // 4]
+        scan = tbl.where(F.col("cell").between(lo, hi))
+        plan = formatted_plan(scan)
+        assert "PushedFilters" in plan
+        assert "GreaterThanOrEqual(cell" in plan
+        assert "LessThanOrEqual(cell" in plan
+        flat = B.blocked_pages(spark, SF).where(F.col("cell").between(lo, hi))
+        assert scan.count() == flat.count() == len(
+            [c for c in cells if lo <= c <= hi]) > 0
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -71,16 +71,21 @@ def test_slope_partial_aggregation(spark):
 
 
 def test_layout_scan_pushes_cell_range(spark, tmp_path):
-    """Cell-range predicates must reach the parquet scan as PushedFilters."""
-    from setsm_postprocessing_python_spark.sources.layout import (
-        cell_range_scan, write_pages_layout)
-    from setsm_postprocessing_python_spark.sources.pages import geocoded_pages
+    """Cell-range predicates must reach the bucketed pages scan as
+    PushedFilters."""
+    import pyspark.sql.functions as F
 
-    d = str(tmp_path / "pages")
-    write_pages_layout(geocoded_pages(spark, SF), d)
-    plan = formatted_plan(cell_range_scan(spark, d, 0, 10**9))
-    assert "PushedFilters" in plan
-    assert "GreaterThanOrEqual(cell" in plan
+    from setsm_postprocessing_python_spark.sources import bucketed as B
+
+    table = "t_bkt_cell_range"
+    try:
+        tbl, _ = B.ensure_bucketed_pages(spark, SF, str(tmp_path / "bkt"),
+                                         table=table, n_buckets=4)
+        plan = formatted_plan(tbl.where(F.col("cell").between(0, 10**9)))
+        assert "PushedFilters" in plan
+        assert "GreaterThanOrEqual(cell" in plan
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_adaptive_assign_join_path_matches_pip_and_guards(spark):
